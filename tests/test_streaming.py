@@ -554,6 +554,32 @@ def test_cdc_snapshot_equal_ts_delete_wins(spark, tmp_path):
         ).count() == 0, "equal-ts DELETE must win over the PUT"
 
 
+def test_cdc_snapshot_equal_ts_put_tie_matches_served_value(spark, tmp_path):
+    """Two PUTs for one key at one ts: the CDC snapshot must keep the value
+    the store serves (latest_wins: larger canonical JSON of the value), so
+    the next batch's `before` is a value a reader actually saw. A separate
+    hash tie-break once kept 'v10' here while the store served 'v21'."""
+    from venice_spark.streaming.hybrid import latest_wins
+
+    schema = "key string, val string, ts long, op string"
+    batch = spark.createDataFrame(
+        [("k", "v21", 10, "PUT"), ("k", "v10", 10, "PUT")], schema
+    )
+    served = latest_wins(batch, ["key"], "ts").collect()[0]["val"]
+    assert served == "v21"
+
+    snap_dir = str(tmp_path / "snap")
+    out_dir = str(tmp_path / "events")
+    ccs = ChangeCaptureStream(spark, snap_dir, out_dir, ["key"], "val", "ts")
+    ccs._process_batch(batch, 0)
+    snap = {r["key"]: r["val"] for r in spark.read.parquet(snap_dir).collect()}
+    assert snap == {"k": served}
+
+    ccs._process_batch(spark.createDataFrame([("k", "v3", 20, "PUT")], schema), 1)
+    nxt = [r for r in spark.read.parquet(out_dir).collect() if r["ts"] == 20]
+    assert [(r["op"], r["before"], r["after"]) for r in nxt] == [("PUT", served, "v3")]
+
+
 def _dir_bytes(path):
     total = 0
     for dirpath, _dirnames, filenames in os.walk(path):

@@ -33,6 +33,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from venice_spark.merge.dcr import keep_latest
+
 
 def _slot_index(slot_dir: str) -> int:
     """Numeric index of a `d{K}` delta-slot dir (naming only, not precedence)."""
@@ -636,13 +638,12 @@ class StoreCatalog:
         survive resolution until filtered at the end, so a delete in d2
         hides a put in d1.
 
-        This is the ONE latest-wins LSM kernel: view/bucketed-view readers
-        reuse it with `window_keys` (their bases carry no store
+        This is the ONE delta-log read (keep_latest ordered by slot index):
+        view/bucketed-view readers reuse it with `window_keys` (their bases carry no store
         partition_id, or a differently-keyed one) and `delta_columns`
         (project the store-shaped delta rows down to the view's columns
         before the union)."""
         import pyspark.sql.functions as F
-        from pyspark.sql import Window
 
         wkeys = window_keys if window_keys is not None else ["partition_id"] + list(key_fields)
         parts = [base.withColumn("__src", F.lit(0))]
@@ -657,12 +658,7 @@ class StoreCatalog:
         allp = parts[0]
         for p in parts[1:]:
             allp = allp.unionByName(p, allowMissingColumns=True)
-        w = Window.partitionBy(*wkeys).orderBy(F.col("__src").desc())
-        out = (
-            allp.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__src")
-        )
+        out = keep_latest(allp, wkeys, [F.col("__src").desc()]).drop("__src")
         if "__del" in out.columns:
             out = out.filter(~F.coalesce(F.col("__del"), F.lit(False))).drop("__del")
         return out

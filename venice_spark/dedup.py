@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 
 from venice_spark.functions import text as TX
 from venice_spark.functions import vectors as VX
+from venice_spark.merge.dcr import keep_latest
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
@@ -853,14 +854,7 @@ def exact_dedup_incremental(
     keep it bucketed by fingerprint so this anti-join is co-located and the
     history is never re-scanned per batch."""
     fp = TX.fingerprint(F.col(text_col))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(fp).orderBy(id_col)
-    in_batch = (
-        new_df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    in_batch = keep_latest(new_df, [fp], [F.col(id_col).asc()])
     if history_fp_col is not None:
         hist = history_df.select(F.col(history_fp_col).alias("__fp"))
     else:

@@ -54,6 +54,28 @@ def _tuple(ts: int, kind: int, value: Any, colo: int) -> tuple:
     return (ts, kind, _rank(value), colo)
 
 
+def keep_latest(df, keys: list, order: list):
+    """One row per key: the first row under `order`, no helper column left.
+
+    The single keep-one-per-key kernel (push delta dedup, the delta-log
+    read, hybrid/AA replay, the CDC snapshot, corpus exact dedup). `keys`
+    are column names or Columns; `order` is a list of sort Columns and is
+    each caller's semantic choice (ts + delete-wins + value rank for RT
+    replay, slot index for the delta log, lowest id for dedup). Rows the
+    order does not separate tie by shuffle order, so callers that need a
+    deterministic winner supply a total order. NULL placement follows the
+    sort Column: `desc()` puts NULLs last, `asc()` first.
+
+    Lowering: row_number() == 1 over the key window — Spark turns the
+    filter into a WindowGroupLimit (per-partition top-1 before the
+    shuffle), and a filter on a key column pushes through the window."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+
+
 def _freeze(e: Any):
     """Hashable identity for a collection element. Scalars pass through;
     lists/tuples and dicts (array<struct>/map-valued elements) freeze to

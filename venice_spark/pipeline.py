@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 
 from venice_spark import dedup as DD
 from venice_spark.functions import text as TX
+from venice_spark.merge.dcr import keep_latest
 
 
 @dataclass
@@ -129,14 +130,7 @@ def prepare_corpus(
     qual = gated.filter(pred).withColumn("n_tokens", m["n"]).drop("__gate_m")
 
     # 2. exact dedup — keep lowest id per fingerprint (one shuffle)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(TX.fingerprint(text_col)).orderBy(id_col)
-    kept = (
-        qual.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    kept = keep_latest(qual, [TX.fingerprint(text_col)], [F.col(id_col).asc()])
 
     # 3. optional near-dup removal
     if cfg.near_dup_jaccard is not None:

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from venice_spark.compute import ComputeAggregationBuilder, ComputeRequestBuilder
 from venice_spark.functions import vectors
+from venice_spark.merge.dcr import keep_latest
 
 # deterministic 64-dim weight vector used by all vector-compute queries
 DIM = 64
@@ -304,6 +305,14 @@ def r16_hll_approx(spark, sf_dir):
 
 # ---------------------------------------------------------------- write path
 
+def _latest_order(orders: DataFrame) -> DataFrame:
+    """Each customer's latest order (o_orderdate, then o_orderkey): the
+    update stream of the W3 and serving-evolution queries."""
+    return keep_latest(
+        orders, ["o_custkey"], [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()]
+    )
+
+
 @register(
     "w1_put_latest_wins",
     "SELECT user_id, event_type, event_id, value FROM ("
@@ -318,14 +327,10 @@ def w1_put_latest_wins(spark, sf_dir):
     docs/getting-started/learn-venice/merging-batch-and-rt-data.md:57-66).
     Single shuffle on the key; at scale this is the compaction pattern."""
     df = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
+    latest = keep_latest(
+        df, ["user_id", "event_type"], [F.col("ts").desc(), F.col("event_id").desc()]
     )
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_type", "event_id", "value")
-    )
+    return latest.select("user_id", "event_type", "event_id", "value")
 
 
 @register(
@@ -344,13 +349,8 @@ def w3_partial_update_set_field(spark, sf_dir):
     (UpdateBuilder.java:33, WriteComputeHandlerV1.java:27)."""
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
-    updates = (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", F.col("o_totalprice").alias("new_bal"))
+    updates = _latest_order(orders).select(
+        "o_custkey", F.col("o_totalprice").alias("new_bal")
     )
     return cust.join(updates, cust.c_custkey == updates.o_custkey, "left").select(
         "c_custkey",
@@ -404,12 +404,8 @@ def w2_delete_tombstone(spark, sf_dir):
     ops = df.withColumn(
         "op", F.when(F.col("event_type") == "error", F.lit("DELETE")).otherwise(F.lit("PUT"))
     )
-    w = Window.partitionBy("user_id", "event_type").orderBy(F.col("event_id").desc())
-    return (
-        ops.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "DELETE"))
-        .select("user_id", "event_type", "value")
-    )
+    latest = keep_latest(ops, ["user_id", "event_type"], [F.col("event_id").desc()])
+    return latest.filter(F.col("op") != "DELETE").select("user_id", "event_type", "value")
 
 
 @register(
@@ -1050,13 +1046,8 @@ def x_evolved_serve(spark, sf_dir):
         F.col("c_acctbal").alias("acctbal"),
         F.lit(0).alias("ts"),
     )
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
     upd = (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _latest_order(_t(spark, sf_dir, "orders"))
         .select(
             F.col("o_custkey").alias("c_custkey"),
             F.concat(F.lit("order-"), F.col("o_orderkey").cast("string")).alias("name"),
@@ -1114,13 +1105,8 @@ def x_promoted_serve(spark, sf_dir):
         F.col("c_acctbal").cast("float").cast(score_t).alias("score"),
         F.lit(0).alias("ts"),
     )
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
     upd = (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _latest_order(_t(spark, sf_dir, "orders"))
         .select(
             F.col("o_custkey").alias("c_custkey"),
             F.floor(F.col("o_totalprice") * 1000000).alias("balance"),
@@ -1177,13 +1163,8 @@ def x_cast_promoted_serve(spark, sf_dir):
         F.floor(F.col("c_acctbal")).cast("long").cast(metric_t).alias("metric"),
         F.lit(0).alias("ts"),
     )
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
     upd = (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _latest_order(_t(spark, sf_dir, "orders"))
         .select(
             F.col("o_custkey").alias("c_custkey"),
             F.col("o_totalprice").cast("double").alias("metric"),
@@ -1245,13 +1226,8 @@ def x_rt_migrated_serve(spark, sf_dir):
     )
     orders = _t(spark, sf_dir, "orders")
     # gen1: the wide flush that triggered the migration (native double)
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
     upd1 = (
-        orders.filter(F.col("o_custkey") % 3 != 0)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _latest_order(orders.filter(F.col("o_custkey") % 3 != 0))
         .select(
             F.col("o_custkey").alias("c_custkey"),
             F.col("o_totalprice").cast("double").alias("metric"),
@@ -1377,12 +1353,8 @@ def w10_repush_offset_dedup(spark, sf_dir):
     for the topic with event_id as the offset. Rank-limit pushdown
     (WindowGroupLimit) makes the shuffle carry ~1 row per key."""
     df = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("event_id").desc())
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "event_type", "value")
-    )
+    latest = keep_latest(df, ["user_id"], [F.col("event_id").desc()])
+    return latest.select("user_id", "event_id", "event_type", "value")
 
 
 _TP_TOKS = _TOKS
@@ -1446,10 +1418,8 @@ def x_training_pipeline(spark, sf_dir):
             TX.fingerprint("text").alias("fingerprint"),
         )
     )
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
     return (
-        qual.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        keep_latest(qual, ["fingerprint"], [F.col("doc_id").asc()])
         .groupBy("lang")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").alias("total_tokens"))
     )

@@ -25,9 +25,10 @@ import json
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from venice_spark.catalog import StoreCatalog
+from venice_spark.merge.dcr import keep_latest
 from venice_spark.partitioner import repartition_and_sort, with_partition_id
 
 
@@ -74,19 +75,6 @@ def _fix_empty_partitioned_dir(out: DataFrame, path: str, col: str = "partition_
 
     if not any(e.startswith(f"{col}=") for e in os.listdir(path)):
         out.write.mode("overwrite").parquet(path)
-
-
-def _dedup_latest_wins(df: DataFrame, key_fields: list[str], order_col: str | None) -> DataFrame:
-    """Keep one row per key. With an order column, highest wins (deterministic);
-    without, rows must be identical duplicates (checked by caller)."""
-    if order_col is None:
-        return df.dropDuplicates(key_fields)
-    w = Window.partitionBy(*key_fields).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def check_duplicate_keys(df: DataFrame, key_fields: list[str]) -> DataFrame:
@@ -1049,8 +1037,12 @@ def _prepare_delta(
         for c in vcols:
             is_del = is_del & F.col(c).isNull()
         delta = delta.withColumn("__del", is_del)
-    # dedup WITHIN the delta only (it is small; the base never sees a window)
-    return _dedup_latest_wins(delta, key_fields, order_col)
+    # dedup WITHIN the delta only (it is small; the base never sees a window).
+    # With an order column, highest wins; without, rows must be identical
+    # duplicates (checked by the caller).
+    if order_col is None:
+        return delta.dropDuplicates(key_fields)
+    return keep_latest(delta, key_fields, [F.col(order_col).desc()])
 
 
 def _append_delta_slot(

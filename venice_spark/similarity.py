@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from venice_spark.functions import vectors as VX
+from venice_spark.merge.dcr import keep_latest
 
 
 def brute_force_topk(
@@ -348,19 +349,9 @@ def knn_classify(
         .groupBy("lid", label_col)
         .agg(F.count("*").alias("votes"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("lid").orderBy(
-        F.col("votes").desc(), F.col(label_col).asc()
-    )
-    return (
-        votes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col("lid").alias(id_col),
-            F.col(label_col).alias("predicted"),
-            "votes",
-        )
+    top = keep_latest(votes, ["lid"], [F.col("votes").desc(), F.col(label_col).asc()])
+    return top.select(
+        F.col("lid").alias(id_col), F.col(label_col).alias("predicted"), "votes"
     )
 
 

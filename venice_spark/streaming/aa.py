@@ -41,6 +41,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from venice_spark.catalog import StoreCatalog
+from venice_spark.merge.dcr import keep_latest
 
 
 class ActiveActiveReplay:
@@ -358,8 +359,6 @@ class ActiveActiveReplay:
         Filter + Window (code-review r5). `raw` lets a caller reuse one
         already-listed read of the log (each `_raw()` re-lists the dir —
         3x per trigger added up on a bucketed layout)."""
-        from pyspark.sql import Window
-
         df = self._raw() if raw is None else raw
         if keys is not None:
             if self.buckets:
@@ -367,14 +366,7 @@ class ActiveActiveReplay:
             df = df.join(F.broadcast(keys), on=self.key_fields, how="left_semi")
         if "__aa_batch" not in df.columns:
             return df
-        w = Window.partitionBy(*self.key_fields).orderBy(
-            F.col("__aa_batch").desc_nulls_last()
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        return keep_latest(df, self.key_fields, [F.col("__aa_batch").desc_nulls_last()])
 
     def _serialized_writer(self):
         """Store writer lock, re-entrant per handle — see

@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from venice_spark.functions import text as TX
+from venice_spark.merge.dcr import keep_latest
 
 
 def streaming_corpus_prep(
@@ -234,14 +235,7 @@ def run_corpus_ingest_to_store(
             # then the anti-join against the history digest — the fp STORE
             # when it serves (16 B/doc), else fingerprints derived from the
             # corpus text on the fly
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("__fp").orderBy(id_col)
-            fresh = (
-                fresh.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            fresh = keep_latest(fresh, ["__fp"], [F.col(id_col).asc()])
             if fp_store is not None and engine.catalog.current_version(fp_store) > 0:
                 history = engine.store(fp_store).df().select(
                     F.col("fingerprint").alias("__hfp")

@@ -26,16 +26,18 @@ resolves by TIMESTAMP (delete-wins-ties) — Merge.java:27-31's determinism
 contract makes arrival order irrelevant, so a stale PUT landing in a later
 micro-batch must LOSE to the fresher row already merged. Routing RT
 micro-batches through the slot-order log would break exactly that case.
-Both logs funnel through one latest-wins kernel family (`resolve_latest`
-here, `_resolve_delta_view` there); the order key is the semantic choice.
+Both logs resolve through the one keep-one-per-key kernel,
+`merge.dcr.keep_latest` (`resolve_latest` here, `_resolve_delta_view`
+there); each caller's order key is its semantic choice.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from venice_spark.catalog import StoreCatalog
+from venice_spark.merge.dcr import keep_latest
 
 
 def _is_delete() -> "F.Column":
@@ -80,8 +82,7 @@ def resolve_latest(
         )
     if "colo" in df.columns:
         order.append(F.col("colo").desc())
-    w = Window.partitionBy(*key_fields).orderBy(*order)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    return keep_latest(df, key_fields, order)
 
 
 def latest_wins(df: DataFrame, key_fields: list[str], ts_col: str, tiebreak: list[str] | None = None) -> DataFrame:

@@ -33,7 +33,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field as dc_field
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
+
+from venice_spark.merge.dcr import keep_latest
 
 
 @dataclass
@@ -71,13 +73,6 @@ class UpdateBuilder:
 
 
 # ---- expression library ----
-
-def merged_scalar(old: Column, set_col: Column | None) -> Column:
-    """W3 setNewFieldValue: NULL update = NoOp."""
-    if set_col is None:
-        return old
-    return F.coalesce(set_col, old)
-
 
 def merged_list(
     old: Column,
@@ -233,13 +228,10 @@ def apply_update_log(
             all_ops = all_ops.join(setts, on=key_fields, how="left").filter(
                 F.col(setts_c).isNull() | (F.col(ts_col) >= F.col(setts_c))
             )
-        we = Window.partitionBy(*key_fields, elem_col).orderBy(
-            F.col(ts_col).desc(), F.col("op").desc()  # 'rem' > 'add': remove wins ties
-        )
-        last = (
-            all_ops.filter(F.col(elem_col).isNotNull())
-            .withColumn("__rn", F.row_number().over(we))
-            .filter(F.col("__rn") == 1)
+        last = keep_latest(
+            all_ops.filter(F.col(elem_col).isNotNull()),
+            [*key_fields, elem_col],
+            [F.col(ts_col).desc(), F.col("op").desc()],  # 'rem' > 'add': remove wins ties
         )
         return last.groupBy(*key_fields).agg(*aggs)
 
